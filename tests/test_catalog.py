@@ -55,6 +55,22 @@ def test_catalog_hash_and_numbering(spark, doc_dir):
     assert numbers == list(range(1, len(rows) + 1))
 
 
+@pytest.mark.parametrize("max_files", [5, None])
+def test_catalog_scans_source_once(spark, doc_dir, max_files):
+    """One binaryFile scan in the executed plan (numbering rides on the
+    deduplicated rows, not a path-only branch joined back), and
+    file_number stays dense 1..n in file_path order."""
+    cat = build_catalog(
+        list_files(spark, doc_dir, FilePattern(globs=["*.txt"], max_files=max_files))
+    )
+    rows = cat.collect()
+    final = cat._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
+    assert final.count("FileScan binaryFile") == 1
+    ordered = sorted(rows, key=lambda r: r.file_path)
+    assert [r.file_number for r in ordered] == list(range(1, len(rows) + 1))
+    assert len(rows) == (max_files or 11)
+
+
 def test_catalog_mime_filter(spark, doc_dir):
     cat = build_catalog(
         list_files(spark, doc_dir, FilePattern(max_files=None)),

@@ -135,6 +135,37 @@ def test_history_merge_upsert(spark, tmp_path):
     assert store.replay_results(files).collect()[0].result == '{"x":1}'
 
 
+def test_history_without_ledger_folds_joins(spark, tmp_path):
+    """No ledger yet: the snapshot is an empty LocalRelation, so Catalyst
+    folds the replay join to an empty relation and the F2 anti-join to
+    the catalog itself, on both backends."""
+    files = spark.createDataFrame(
+        [("k1", "/a", b"x"), ("k2", "/b", b"y")],
+        "file_hash string, file_path string, content binary",
+    )
+    for backend in ("swap", "manifest"):
+        store = FileHistoryStore(spark, str(tmp_path / backend), backend=backend)
+        done = store.completed()
+        replay = store.replay_results(files, done)
+        assert "content" not in replay.columns
+        plan = replay._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation <empty>")
+        fresh = store.dedup_catalog(files, done)
+        assert "Join" not in fresh._jdf.queryExecution().optimizedPlan().toString()
+        assert fresh.count() == 2
+
+
+def test_no_python_backed_empty_frames():
+    """Empty frames come from session.empty_frame: an empty list through
+    createDataFrame is a Python-backed RDD that Catalyst cannot fold, so
+    every plan touching it runs a job of Python tasks."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "unstract_spark"
+    hits = [str(p) for p in pkg.rglob("*.py") if "createDataFrame([]" in p.read_text()]
+    assert hits == []
+
+
 # ---------- review queue ----------
 
 
@@ -466,6 +497,46 @@ def test_run_extraction_isolates_bad_files(spark, tmp_path):
     out2 = run_extraction(spark, job)
     names2 = {r.file_name for r in out2["results"].collect()}
     assert names2 == {"bad.txt"}
+
+
+def test_run_extraction_one_ledger_snapshot(spark, tmp_path, monkeypatch):
+    """A merge by another writer between the F2 anti-join and the replay
+    join cannot put a file in both `fresh` and `skipped`, or in neither:
+    both joins read one ledger snapshot."""
+    src = tmp_path / "docs"
+    src.mkdir()
+    for i in range(2):
+        (src / f"d{i}.txt").write_text(f"receipt body {i}")
+    job = ExtractionJob(
+        source_dir=str(src),
+        history_path=str(tmp_path / "hist"),
+        prompt_specs=[{"prompt_key": "f1", "prompt": "x", "enforce_type": "text"}],
+    )
+    run_extraction(spark, job)
+    for i in range(2, 4):
+        (src / f"d{i}.txt").write_text(f"receipt body {i}")
+
+    dedup = FileHistoryStore.dedup_catalog
+
+    def dedup_then_foreign_merge(self, files, completed=None):
+        fresh = dedup(self, files, completed)
+        FileHistoryStore(spark, job.history_path).merge(
+            files.filter(F.col("file_name") == "d2.txt").select(
+                F.col("file_hash").alias("cache_key"),
+                "file_path",
+                F.lit(job.workflow_id).alias("workflow_id"),
+                F.lit("COMPLETED").alias("status"),
+                F.lit("{}").alias("result"),
+            )
+        )
+        return fresh
+
+    monkeypatch.setattr(FileHistoryStore, "dedup_catalog", dedup_then_foreign_merge)
+    out = run_extraction(spark, job)
+    fresh = {r.file_name for r in out["results"].collect()}
+    skipped = {r.file_path.rsplit("/", 1)[-1] for r in out["skipped"].collect()}
+    assert fresh == {"d2.txt", "d3.txt"}
+    assert skipped == {"d0.txt", "d1.txt"}
 
 
 def test_streaming_index_maintenance(spark, tmp_path):

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from unstract_spark.schemas import CHUNKS
+from unstract_spark.session import empty_frame
 from unstract_spark.sinks.ledger_lock import LedgerLock
 from unstract_spark.sinks.vector_db import VectorStoreBackend
 
@@ -72,7 +73,7 @@ class VectorIndexStore(VectorStoreBackend):
             # immutable segments: snapshot is stable without pinning
             return self._manifest.snapshot(CHUNKS)[1]
         if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], CHUNKS)
+            return empty_frame(self.spark, CHUNKS)
         return self.spark.read.parquet(self.path).localCheckpoint(eager=True)
 
     def read_chunks(self) -> DataFrame:

@@ -72,9 +72,9 @@ def run_extraction(spark: SparkSession, job: ExtractionJob) -> dict[str, DataFra
     # replay join, extraction), and without a barrier each one re-lists
     # and re-reads every source file. localCheckpoint writes partitions
     # to executor-local storage — the classic staging step, no driver
-    # involvement, no CacheManager entry — so the source connector is
-    # read exactly once per run (reference reads each file once,
-    # source.py:938-954).
+    # involvement, no CacheManager entry. build_catalog's plan holds one
+    # binaryFile scan, so the source connector is read exactly once per
+    # run (reference reads each file once, source.py:938-954).
     catalog = build_catalog(listing).localCheckpoint(eager=True)
     stats = None
     if job.stats_path is not None:
@@ -83,8 +83,11 @@ def run_extraction(spark: SparkSession, job: ExtractionJob) -> dict[str, DataFra
         stats = TableStatsStore(spark, job.stats_path)
     store = FileHistoryStore(spark, job.history_path, stats=stats)
 
-    fresh = store.dedup_catalog(catalog)
-    skipped = store.replay_results(catalog)
+    # one ledger snapshot for both joins: `fresh` and `skipped` partition
+    # the catalog even if another writer merges in between
+    done = store.completed()
+    fresh = store.dedup_catalog(catalog, done)
+    skipped = store.replay_results(catalog, done)
 
     # T1 — MIME-dispatched extraction with per-file error isolation
     # (reference hard-part 5, legacy_executor.py:159-163): a bad file

@@ -15,7 +15,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -68,30 +70,13 @@ def get_spark(
     return spark
 
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+def empty_frame(spark: SparkSession, schema: StructType | str) -> DataFrame:
+    """A zero-row frame (StructType or DDL schema) that Catalyst can see
+    is empty: its plan is an empty LocalRelation, so joins, unions and
+    aggregates over it fold away at optimization time. An empty Python
+    list through createDataFrame is instead an opaque Python-backed RDD
+    that costs a job of Python tasks every time a plan touches it."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Load the driver's parquet tables from one scale-factor dir.
-
-    Plain `spark.read.parquet` so Catalyst keeps pushdown/pruning; no
-    caching here — callers decide what is hot.
-    """
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each table as a temp view (mirrors the oracle harness)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

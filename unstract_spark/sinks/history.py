@@ -26,24 +26,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from unstract_spark.schemas import FILE_HISTORY
+from unstract_spark.session import empty_frame
 from unstract_spark.sinks.ledger_lock import LedgerLock
 from unstract_spark.sinks.manifest import ManifestTable
 
 MERGE_KEYS = ["cache_key", "workflow_id", "file_path"]
 
 
-def _merge_newest_wins(current: DataFrame, updates: DataFrame) -> DataFrame:
-    """MERGE semantics shared by both backends: union + per-key window
-    dedup, updates outranking the current snapshot."""
-    cur = current.withColumn("_ts", F.lit(0.0))
-    upd = updates.withColumn("_ts", F.lit(1.0))
-    merged = cur.unionByName(upd, allowMissingColumns=True)
-    w = Window.partitionBy(*MERGE_KEYS).orderBy(F.col("_ts").desc())
-    return (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_ts")
-    )
+def _newest_per_key(df: DataFrame) -> DataFrame:
+    """MERGE semantics shared by both backends: per-key window dedup,
+    the row with the highest `_seq` (the later write) winning."""
+    w = Window.partitionBy(*MERGE_KEYS).orderBy(F.col("_seq").desc())
+    return df.withColumn("_rn", F.row_number().over(w)).filter("_rn = 1").drop("_rn", "_seq")
 
 
 STATS_TABLE = "file_history"
@@ -99,16 +93,19 @@ class FileHistoryStore:
         segment commit order (the LSM read path; compact() folds the
         window cost back down)."""
         if self._manifest is not None:
-            _, df = self._manifest.snapshot_with_seq(FILE_HISTORY)
-            w = Window.partitionBy(*MERGE_KEYS).orderBy(F.col("_seq").desc())
-            return (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn", "_seq")
-            )
+            return _newest_per_key(self._manifest.snapshot_with_seq(FILE_HISTORY)[1])
+        return self._read_swap(pin=True)
+
+    def _read_swap(self, pin: bool) -> DataFrame:
+        """The swap backend's table. The schema is given, not inferred
+        (merge() writes exactly FILE_HISTORY), so no footer-reading job
+        runs; a missing ledger stays a visible-empty frame, which a
+        checkpoint would hide from Catalyst. Unpinned, the frame is only
+        valid until the next merge swaps the directory."""
         if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], FILE_HISTORY)
-        return self.spark.read.parquet(self.path).localCheckpoint(eager=True)
+            return empty_frame(self.spark, FILE_HISTORY)
+        df = self.spark.read.schema(FILE_HISTORY).parquet(self.path)
+        return df.localCheckpoint(eager=True) if pin else df
 
     def merge(self, updates: DataFrame) -> None:
         """Upsert: newest row per merge key wins.
@@ -120,14 +117,21 @@ class FileHistoryStore:
         per merge, the only write cost a 100 TB ledger can afford for
         a 200-row batch; precedence is resolved at read time. A batch
         with internal duplicate keys keeps an arbitrary one — the same
-        contract the swap path's single-timestamp window gives.
+        contract the swap path's newest-per-key window gives. The swap
+        ledger holds exactly the FILE_HISTORY columns and types.
         """
         if self._manifest is not None:
             self._manifest.append(updates)
             self._analyze()
             return
         with LedgerLock(self.path):
-            deduped = _merge_newest_wins(self.read(), updates)
+            # unpinned: the write consumes the whole table before the swap
+            merged = self._read_swap(pin=False).withColumn("_seq", F.lit(0)).unionByName(
+                updates.withColumn("_seq", F.lit(1)), allowMissingColumns=True
+            )
+            deduped = _newest_per_key(merged).select(
+                *[F.col(f.name).cast(f.dataType) for f in FILE_HISTORY.fields]
+            )
             staging = f"{self.path}.staging-{int(time.time() * 1000)}"
             deduped.write.mode("overwrite").parquet(staging)
             old = f"{self.path}.old-{int(time.time() * 1000)}"
@@ -185,51 +189,52 @@ class FileHistoryStore:
         if self._manifest is None:
             return True
         v, df = self._manifest.snapshot_with_seq(FILE_HISTORY)
-        w = Window.partitionBy(*MERGE_KEYS).orderBy(F.col("_seq").desc())
-        resolved = (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_seq")
-        )
-        ok = self._manifest.compact(resolved, base_version=v)
+        ok = self._manifest.compact(_newest_per_key(df), base_version=v)
         if ok:
             self._manifest.vacuum()
         return ok
 
     def completed(self) -> DataFrame:
-        """Rows eligible for dedup/replay (status gate, file_history.py:21)."""
+        """Rows eligible for dedup/replay (status gate, file_history.py:21).
+        One call is one snapshot: pass the same frame to dedup_catalog()
+        and replay_results() so a merge landing between the two cannot
+        put a file in both `fresh` and `skipped`, or in neither."""
         return self.read().filter(F.col("status") == "COMPLETED")
 
-    def dedup_catalog(self, files: DataFrame) -> DataFrame:
-        """F2: drop catalog rows already COMPLETED (left_anti). With a
+    def dedup_catalog(
+        self, files: DataFrame, completed: DataFrame | None = None
+    ) -> DataFrame:
+        """F2: drop catalog rows already COMPLETED (left_anti) in the
+        `completed()` snapshot (a fresh one when None). With a
         configured stats store the join shape is the stats-priced one
         (broadcast the ledger when its persisted size bound fits; split
         around its stored hot keys when a content hash dominates —
         e.g. one boilerplate document uploaded a million times; plain
         shuffle otherwise); the row multiset is identical either way."""
-        hist = self.completed().select(
-            F.col("cache_key").alias("file_hash"), "file_path"
-        )
-        plan = self._join_plan()
-        if plan is not None:
-            return self.stats.apply_using_join(
-                files, hist, ["file_hash", "file_path"], plan,
-                "left_anti",
-                column_aliases={"file_hash": STATS_COLUMN},
-            )
-        return files.join(hist, ["file_hash", "file_path"], "left_anti")
+        return self._join_history(files, completed, [], "left_anti")
 
-    def replay_results(self, files: DataFrame) -> DataFrame:
+    def replay_results(
+        self, files: DataFrame, completed: DataFrame | None = None
+    ) -> DataFrame:
         """Cached results for catalog rows that hit history (the replay
-        path, destination.py:593-612): inner join on hash+path —
-        stats-priced like dedup_catalog when a stats store is set."""
-        hist = self.completed().select(
-            F.col("cache_key").alias("file_hash"), "file_path", "result", "metadata"
+        path, destination.py:593-612): inner join on hash+path against
+        the `completed()` snapshot (a fresh one when None), priced like
+        dedup_catalog. The file bytes (`content`) are dropped: a cache
+        hit needs its result, not its input."""
+        return self._join_history(
+            files.drop("content"), completed, ["result", "metadata"], "inner"
         )
+
+    def _join_history(
+        self, files: DataFrame, completed: DataFrame | None, payload: list[str], how: str
+    ) -> DataFrame:
+        if completed is None:
+            completed = self.completed()
+        keys = ["file_hash", "file_path"]
+        hist = completed.select(F.col("cache_key").alias("file_hash"), "file_path", *payload)
         plan = self._join_plan()
         if plan is not None:
             return self.stats.apply_using_join(
-                files, hist, ["file_hash", "file_path"], plan, "inner",
-                column_aliases={"file_hash": STATS_COLUMN},
+                files, hist, keys, plan, how, column_aliases={"file_hash": STATS_COLUMN}
             )
-        return files.join(hist, ["file_hash", "file_path"], "inner")
+        return files.join(hist, keys, how)

@@ -47,6 +47,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from unstract_spark.session import empty_frame
+
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
 
@@ -253,7 +255,7 @@ class ManifestTable:
             )
         segs = self.segments(v)
         if not segs:
-            return v, self.spark.createDataFrame([], schema)
+            return v, empty_frame(self.spark, schema)
         # mergeSchema: segments may carry WIDENED schemas (append() of
         # updates with a new column); the plain reader would take one
         # file's schema and silently drop the addition. Footer-merge
@@ -361,8 +363,7 @@ class ManifestTable:
         v = self.version()
         segs = self.segments(v)
         if not segs:
-            empty = self.spark.createDataFrame([], schema)
-            return v, empty.withColumn("_seq", F.lit(0))
+            return v, empty_frame(self.spark, schema).withColumn("_seq", F.lit(0))
         df = self.spark.read.option("mergeSchema", "true").parquet(
             *[os.path.join(self.data_dir, s) for s in segs]
         )

@@ -11,9 +11,10 @@ file index, `_metadata`-equivalent columns (path/modificationTime/length)
 for free, and `orderBy(...).limit(n)` compiling to a global TakeOrdered
 (top-k, no full sort) for the FIFO/LIFO cap.
 
-Scale note: at 100 TB the catalog itself is millions of rows; everything
-downstream joins on `file_hash`, so we hash the *content* lazily (only
-rows that survive pattern + dedup filters ever read bytes).
+Hashing cost: Catalyst pushes the sha256 projection below the max-files
+LocalLimit, so every file a scan task reads is hashed, including files
+the global cap then drops. Only the single-glob pathGlobFilter and
+the zero-byte filter prune files before their bytes are read.
 """
 
 from __future__ import annotations
@@ -157,19 +158,10 @@ def build_catalog(listing: DataFrame, allowed_mime: list[str] | None = None) -> 
     )
     if allowed_mime:
         df = df.filter(F.col("mime_type").isin(allowed_mime))
-    # Global row_number needs a single-partition window, but ONLY the
-    # file_path column rides through it (bounded by max_files — default
-    # 100, hard cap 40k — so a few MB at worst); the numbering is then
-    # broadcast back onto the full rows. Ranking the full frame would
-    # funnel every file's binary `content` through one partition — the
-    # window's payload, not its row count, is what breaks at scale.
-    w_order = F.row_number().over(Window.orderBy(F.col("file_path")))
-    numbers = (
-        df.select("file_path")
-        .withColumn("file_number", w_order.cast("int"))
-    )
-    # Join-back is 1:1, not a fan-out: file_path is unique by the
-    # dropDuplicates(["file_path"]) above, which runs BEFORE both the
-    # numbering side and the full-row side are derived — a listing
-    # carrying the same path twice collapses to one catalog row first.
-    return df.join(F.broadcast(numbers), "file_path")
+    # One single-partition window numbers the full rows. Callers bound the
+    # listing (run_extraction by max_files; an API upload is one request's
+    # files); a capped listing's GlobalLimit already gathers its rows into
+    # one partition, so the window adds a local sort and no exchange, and
+    # the plan scans the source once.
+    w_order = Window.orderBy(F.col("file_path"))
+    return df.withColumn("file_number", F.row_number().over(w_order).cast("int"))

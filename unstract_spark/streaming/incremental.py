@@ -30,6 +30,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from unstract_spark.session import empty_frame
+
 
 class StaleCheckpointError(RuntimeError):
     """Resuming a checkpoint whose run-base lineage is OLDER than
@@ -172,8 +174,8 @@ def _read_parquet_or_none(spark: SparkSession, path: str):
     try:
         return spark.read.parquet(path)
     except AnalysisException as ex:
-        cls = (ex.getErrorClass() or "") if hasattr(ex, "getErrorClass") else ""
-        if "PATH_NOT_FOUND" not in cls and "Path does not exist" not in str(ex):
+        cond = ex.getCondition() or ""
+        if "PATH_NOT_FOUND" not in cond and "Path does not exist" not in str(ex):
             raise
         return None
 
@@ -755,7 +757,7 @@ def streaming_cluster_pipeline(
                     if b != bid:
                         done.append(b)
         if not done:
-            return spark.createDataFrame([], "doc_id long, cluster_id long")
+            return empty_frame(spark, "doc_id long, cluster_id long")
         return spark.read.parquet(f"{labels_dir}/batch_id={max(done)}")
 
     def process(batch: DataFrame, epoch: int) -> None:
@@ -796,7 +798,7 @@ def streaming_cluster_pipeline(
             F.col("ca").alias("id_a"), F.col("cb").alias("id_b")
         )
         if contracted.isEmpty():
-            roots = spark.createDataFrame([], "node long, component long")
+            roots = empty_frame(spark, "node long, component long")
         else:
             roots = connected_components(contracted)
         roots = F.broadcast(
@@ -2099,7 +2101,7 @@ def streaming_triangle_pipeline(
                 "src", "dst"
             ).localCheckpoint(eager=True)
         else:
-            old = spark.createDataFrame([], "src long, dst long")
+            old = empty_frame(spark, "src long, dst long")
         de = canon.join(old, ["src", "dst"], "left_anti").localCheckpoint(
             eager=True
         )
@@ -2630,11 +2632,11 @@ def streaming_join_view_pipeline(
         if l_old is not None:
             l_old = l_old.filter(F.col("batch_id") != bid).select(*payload)
         else:
-            l_old = spark.createDataFrame([], dl.schema)
+            l_old = empty_frame(spark, dl.schema)
         if r_old is not None:
             r_old = r_old.filter(F.col("batch_id") != bid).select(*payload)
         else:
-            r_old = spark.createDataFrame([], dr.schema)
+            r_old = empty_frame(spark, dr.schema)
 
         def _pair(left: DataFrame, right: DataFrame) -> DataFrame:
             lt = left.select(
